@@ -17,3 +17,9 @@ class UnsupportedTypeError(LightFusionError, TypeError):
 
 class InvalidDdlError(LightFusionError, ValueError):
     """Malformed LIGHTGBM DDL, e.g. non-literal function body (``src/lib.rs:53-54``)."""
+
+
+class UnsupportedModelError(LightFusionError, ValueError):
+    """A LightGBM text model whose objective or flags the scorer does not
+    reproduce (rejected at parse, so at CREATE FUNCTION time, rather than
+    silently mis-scored)."""

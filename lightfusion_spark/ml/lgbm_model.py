@@ -42,6 +42,14 @@ Semantics implemented (matching LightGBM's ``Tree::Predict``):
   raw scores go through softmax for ``multiclass``, sigmoid for ``binary``,
   identity otherwise.
 
+A model this scorer would mis-score is REJECTED at parse time with
+:class:`~lightfusion_spark.errors.UnsupportedModelError`: the ``poisson``,
+``gamma``, ``tweedie`` and ``cross_entropy_lambda`` objectives (LightGBM
+applies ``exp``/``log1p(exp)``), a ``sqrt`` objective flag, a
+``sigmoid:<k>`` coefficient other than 1 on ``binary``/``multiclassova``,
+``average_output`` (random-forest models) and linear trees
+(``is_linear=1``).
+
 Traversal is vectorized over rows with NumPy (no Python-per-row loop): an
 integer ``node`` vector descends all rows simultaneously, masking out rows
 that already reached a leaf.  Tree depth bounds the loop, so scoring a batch
@@ -50,16 +58,19 @@ is O(depth × n_rows) NumPy ops regardless of batch size.
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass, field
 
 import numpy as np
+
+from ..errors import UnsupportedModelError
 
 _CATEGORICAL_MASK = 1
 _DEFAULT_LEFT_MASK = 2
 _MISSING_TYPE_NONE = 0
 _MISSING_TYPE_ZERO = 1
 _MISSING_TYPE_NAN = 2
+#: objectives whose output transform :meth:`LightGBMModel.predict` lacks
+_UNSCORED_OBJECTIVES = ("poisson", "gamma", "tweedie", "cross_entropy_lambda")
 
 
 @dataclass
@@ -204,9 +215,36 @@ def _parse_kv(line: str) -> tuple[str, str]:
     return key.strip(), value.strip()
 
 
+def _check_scorable(header: dict[str, str], flags: set[str]) -> None:
+    """Raise :class:`UnsupportedModelError` for a model header that
+    :meth:`LightGBMModel.predict` would mis-score."""
+    obj, *params = header.get("objective", "").split() or [""]
+    if obj in _UNSCORED_OBJECTIVES:
+        raise UnsupportedModelError(
+            f"objective {obj!r} is not supported: LightGBM transforms its "
+            "raw scores and this scorer would return them untransformed"
+        )
+    if "sqrt" in params:
+        raise UnsupportedModelError(
+            f"objective {obj!r} with the sqrt flag is not supported"
+        )
+    sigmoid = dict(p.split(":", 1) for p in params if ":" in p).get("sigmoid")
+    if obj in ("binary", "multiclassova") and float(sigmoid or 1) != 1.0:
+        raise UnsupportedModelError(
+            f"objective {obj!r} with sigmoid:{sigmoid} is not supported "
+            "(only sigmoid:1)"
+        )
+    if "average_output" in flags:
+        raise UnsupportedModelError(
+            "average_output models (random forests) are not supported"
+        )
+
+
 def parse_model_str(text: str) -> LightGBMModel:
-    """Parse the LightGBM text model format into a :class:`LightGBMModel`."""
+    """Parse the LightGBM text model format into a :class:`LightGBMModel`;
+    raises :class:`UnsupportedModelError` for a model it would mis-score."""
     header: dict[str, str] = {}
+    flags: set[str] = set()
     trees: list[Tree] = []
     cur: dict[str, str] | None = None
 
@@ -214,6 +252,11 @@ def parse_model_str(text: str) -> LightGBMModel:
         nonlocal cur
         if cur is None:
             return
+        if cur.get("is_linear", "0") != "0":
+            raise UnsupportedModelError(
+                f"tree {len(trees)} is linear (is_linear=1): linear trees "
+                "are not supported"
+            )
         num_leaves = int(cur["num_leaves"])
         dtyp = (
             np.array([int(x) for x in cur["decision_type"].split()], dtype=np.int64)
@@ -284,6 +327,8 @@ def parse_model_str(text: str) -> LightGBMModel:
             cur = {}
             continue
         if "=" not in line:
+            if not in_trees:
+                flags.add(line)
             continue
         key, value = _parse_kv(line)
         if in_trees and cur is not None:
@@ -294,6 +339,7 @@ def parse_model_str(text: str) -> LightGBMModel:
 
     if "max_feature_idx" not in header:
         raise ValueError("not a LightGBM text model: missing max_feature_idx")
+    _check_scorable(header, flags)
     num_class = int(header.get("num_class", "1"))
     return LightGBMModel(
         num_class=num_class,
@@ -309,7 +355,3 @@ def load_model(path: str) -> LightGBMModel:
     reference ``src/udf.rs:92-97``)."""
     with open(path, "r", encoding="utf-8") as fh:
         return parse_model_str(fh.read())
-
-
-def sigmoid(x: float) -> float:
-    return 1.0 / (1.0 + math.exp(-x))

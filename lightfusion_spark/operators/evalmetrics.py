@@ -34,6 +34,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .storemaint import append_cells, read_cells
+
 
 def _tok(col):
     """Whitespace tokens of the lowercased text, empties dropped — the
@@ -1272,26 +1274,7 @@ def wer_append_batch(
     batch-id-addressed identically (deterministic cells, MAX-collapse
     on read)."""
     cells = corpus_wer(batch_df, id_col, cand_col, ref_col).drop("wer6")
-    cells.withColumn("batch_id", F.lit(int(batch_id)).cast("long")).write.mode(
-        "append"
-    ).parquet(state_dir)
-
-
-def wer_state_cells(spark, state_dir: str) -> DataFrame:
-    """Read a :func:`wer_append_batch` store back to clean per-batch
-    cells: collapse replay duplicates (MAX per batch_id — replays
-    write identical values, so MAX is the identity on clean stores)."""
-    state = spark.read.parquet(state_dir)
-    return (
-        state.groupBy("batch_id")
-        .agg(
-            F.max("n_pairs").alias("n_pairs"),
-            F.max("n_pairs_dropped").alias("n_pairs_dropped"),
-            F.max("total_edits").alias("total_edits"),
-            F.max("total_ref_words").alias("total_ref_words"),
-        )
-        .select("n_pairs", "n_pairs_dropped", "total_edits", "total_ref_words")
-    )
+    append_cells(cells, state_dir, batch_id)
 
 
 def wer_from_store(spark, state_dir: str) -> DataFrame:
@@ -1300,19 +1283,7 @@ def wer_from_store(spark, state_dir: str) -> DataFrame:
     BIT FOR BIT (additive integer cells + the shared
     :func:`_wer6_expr` finisher; asserted by
     ``tests/test_evalmetrics.py``)."""
-    agg = wer_state_cells(spark, state_dir).groupBy().agg(
-        F.coalesce(F.sum("n_pairs"), F.lit(0)).cast("long").alias("n_pairs"),
-        F.coalesce(F.sum("n_pairs_dropped"), F.lit(0))
-        .cast("long")
-        .alias("n_pairs_dropped"),
-        F.coalesce(F.sum("total_edits"), F.lit(0))
-        .cast("long")
-        .alias("total_edits"),
-        F.coalesce(F.sum("total_ref_words"), F.lit(0))
-        .cast("long")
-        .alias("total_ref_words"),
-    )
-    return agg.select(
+    return read_cells(spark, state_dir).select(
         "n_pairs",
         "n_pairs_dropped",
         "total_edits",
@@ -1747,26 +1718,7 @@ def qa_append_batch(
     cells = _qa_cells(
         qa_em_f1(batch_df, qid_col, pred_col, gold_col), []
     )
-    cells.withColumn("batch_id", F.lit(int(batch_id)).cast("long")).write.mode(
-        "append"
-    ).parquet(state_dir)
-
-
-def qa_state_cells(spark, state_dir: str) -> DataFrame:
-    """Read a :func:`qa_append_batch` store back to clean per-batch
-    cells: collapse replay duplicates (MAX per batch_id — replays
-    write identical values, so MAX is the identity on clean
-    stores)."""
-    state = spark.read.parquet(state_dir)
-    return (
-        state.groupBy("batch_id")
-        .agg(
-            F.max("n_questions").alias("n_questions"),
-            F.max("n_em").alias("n_em"),
-            F.max("f1_sum").alias("f1_sum"),
-        )
-        .select("n_questions", "n_em", "f1_sum")
-    )
+    append_cells(cells, state_dir, batch_id)
 
 
 def qa_from_store(spark, state_dir: str) -> DataFrame:
@@ -1775,16 +1727,7 @@ def qa_from_store(spark, state_dir: str) -> DataFrame:
     BIT FOR BIT (additive integer/DECIMAL cells + the shared
     :func:`_qa_finisher_cols` finisher; asserted by
     ``tests/test_evalmetrics.py``)."""
-    agg = qa_state_cells(spark, state_dir).groupBy().agg(
-        F.coalesce(F.sum("n_questions"), F.lit(0))
-        .cast("long")
-        .alias("n_questions"),
-        F.coalesce(F.sum("n_em"), F.lit(0)).cast("long").alias("n_em"),
-        F.coalesce(F.sum("f1_sum"), F.lit(0).cast("decimal(18,6)"))
-        .cast("decimal(18,6)")
-        .alias("f1_sum"),
-    )
-    return agg.select(*_qa_finisher_cols())
+    return read_cells(spark, state_dir).select(*_qa_finisher_cols())
 
 
 def lcs_cells(
@@ -2338,25 +2281,7 @@ def rouge_append_batch(
     however many pairs arrived), batch-id-addressed replay safety
     (deterministic cells, MAX-collapse on read)."""
     cells = _rouge_cells(batch_df, id_col, cand_col, ref_col, max_n=max_n)
-    cells.withColumn("batch_id", F.lit(int(batch_id)).cast("long")).write.mode(
-        "append"
-    ).parquet(state_dir)
-
-
-def rouge_state_cells(spark, state_dir: str) -> DataFrame:
-    """Read a :func:`rouge_append_batch` store back to clean per-batch
-    metric cells (MAX per (metric, batch_id) — replays write identical
-    values, so MAX is the identity on clean stores)."""
-    state = spark.read.parquet(state_dir)
-    return (
-        state.groupBy("metric", "batch_id")
-        .agg(
-            F.max("matched").alias("matched"),
-            F.max("cand_total").alias("cand_total"),
-            F.max("ref_total").alias("ref_total"),
-        )
-        .select("metric", "matched", "cand_total", "ref_total")
-    )
+    append_cells(cells, state_dir, batch_id)
 
 
 def rouge_from_store(spark, state_dir: str) -> DataFrame:
@@ -2364,16 +2289,7 @@ def rouge_from_store(spark, state_dir: str) -> DataFrame:
     :func:`corpus_rouge` over the concatenation of all appended
     batches BIT FOR BIT (additive integer cells + the shared
     :func:`_rouge_finish`; asserted by ``tests/test_evalmetrics.py``)."""
-    summed = (
-        rouge_state_cells(spark, state_dir)
-        .groupBy("metric")
-        .agg(
-            F.sum("matched").cast("long").alias("matched"),
-            F.sum("cand_total").cast("long").alias("cand_total"),
-            F.sum("ref_total").cast("long").alias("ref_total"),
-        )
-    )
-    return _rouge_finish(summed)
+    return _rouge_finish(read_cells(spark, state_dir, ("metric",)))
 
 
 def chrf_append_batch(
@@ -2392,9 +2308,7 @@ def chrf_append_batch(
     pairs' cells as ``(n, matched, cand_total, ref_total, batch_id)``
     parquet rows; replay safety is batch-id-addressed identically."""
     cells = chrf_cells(batch_df, id_col, cand_col, ref_col, max_n=max_n)
-    cells.withColumn("batch_id", F.lit(int(batch_id)).cast("long")).write.mode(
-        "append"
-    ).parquet(state_dir)
+    append_cells(cells, state_dir, batch_id)
 
 
 def chrf_from_store(
@@ -2404,17 +2318,9 @@ def chrf_from_store(
     :func:`chrf_score` over the concatenation of all appended batches
     BIT FOR BIT (additive cells + the shared :func:`chrf_from_cells`
     finisher; asserted by ``tests/test_evalmetrics.py``)."""
-    state = spark.read.parquet(state_dir)
-    clean = (
-        state.groupBy("n", "batch_id")
-        .agg(
-            F.max("matched").alias("matched"),
-            F.max("cand_total").alias("cand_total"),
-            F.max("ref_total").alias("ref_total"),
-        )
-        .select("n", "matched", "cand_total", "ref_total")
+    return chrf_from_cells(
+        read_cells(spark, state_dir, ("n",)), max_n=max_n, beta=beta
     )
-    return chrf_from_cells(clean, max_n=max_n, beta=beta)
 
 
 def annotator_agreement(
@@ -3289,32 +3195,13 @@ def bleu_append_batch(
     mechanism, not the HLL store's idempotence): cells are a
     deterministic function of the batch's rows, so a micro-batch
     replayed after checkpoint recovery writes byte-identical rows
-    under the same ``batch_id``, and :func:`bleu_state_cells`
+    under the same ``batch_id``, and the read side
+    (:func:`~lightfusion_spark.operators.storemaint.read_cells`)
     collapses duplicates (MAX per (n, batch_id)) before summing —
     the reported BLEU can never double-count a replay.
     """
     cells = bleu_cells(batch_df, id_col, cand_col, ref_col, max_n=max_n)
-    cells.withColumn("batch_id", F.lit(int(batch_id)).cast("long")).write.mode(
-        "append"
-    ).parquet(state_dir)
-
-
-def bleu_state_cells(spark, state_dir: str) -> DataFrame:
-    """Read a :func:`bleu_append_batch` store back to clean per-order
-    cells: collapse replay duplicates (MAX per (n, batch_id) — replays
-    write identical values, so MAX is the identity on clean stores)
-    and return ``(n, matched, cand_total, ref_total)`` rows ready for
-    :func:`corpus_bleu_from_cells`."""
-    state = spark.read.parquet(state_dir)
-    return (
-        state.groupBy("n", "batch_id")
-        .agg(
-            F.max("matched").alias("matched"),
-            F.max("cand_total").alias("cand_total"),
-            F.max("ref_total").alias("ref_total"),
-        )
-        .select("n", "matched", "cand_total", "ref_total")
-    )
+    append_cells(cells, state_dir, batch_id)
 
 
 def bleu_from_store(spark, state_dir: str, max_n: int = 4) -> DataFrame:
@@ -3324,7 +3211,9 @@ def bleu_from_store(spark, state_dir: str, max_n: int = 4) -> DataFrame:
     the concatenation of all appended batches BIT FOR BIT — the
     streamed metric is the batch metric (asserted by
     ``tests/test_evalmetrics.py``)."""
-    return corpus_bleu_from_cells(bleu_state_cells(spark, state_dir), max_n=max_n)
+    return corpus_bleu_from_cells(
+        read_cells(spark, state_dir, ("n",)), max_n=max_n
+    )
 
 
 def fleiss_kappa(
@@ -3696,9 +3585,7 @@ def winrate_append_batch(
         F.lit(0).cast("long").alias("n_wins_lo"),
         "n_dropped",
     )
-    cells.unionByName(dropped).withColumn(
-        "batch_id", F.lit(int(batch_id)).cast("long")
-    ).write.mode("append").parquet(state_dir)
+    append_cells(cells.unionByName(dropped), state_dir, batch_id)
 
 
 def winrate_from_store(spark, state_dir: str, z: float = 1.96) -> DataFrame:
@@ -3708,21 +3595,9 @@ def winrate_from_store(spark, state_dir: str, z: float = 1.96) -> DataFrame:
     :func:`_winrate_finish` verbatim, so the result equals
     :func:`winrate_report` over the concatenation of all appended
     batches BIT FOR BIT (asserted by ``tests/test_evalmetrics.py``)."""
-    state = spark.read.parquet(state_dir)
-    clean = state.groupBy("side_lo", "side_hi", "batch_id").agg(
-        F.max("n_games").alias("n_games"),
-        F.max("n_wins_lo").alias("n_wins_lo"),
-        F.max("n_dropped").alias("n_dropped"),
-    )
-    agg = (
-        clean.where(F.col("side_lo").isNotNull())
-        .groupBy("side_lo", "side_hi")
-        .agg(
-            F.sum("n_games").cast("long").alias("n_games"),
-            F.sum("n_wins_lo").cast("long").alias("n_wins_lo"),
-        )
-    )
-    dropped = clean.agg(
+    cells = read_cells(spark, state_dir, ("side_lo", "side_hi"))
+    agg = cells.where(F.col("side_lo").isNotNull()).drop("n_dropped")
+    dropped = cells.agg(
         F.coalesce(F.sum("n_dropped"), F.lit(0)).cast("long").alias("n_dropped")
     )
     return _winrate_finish(agg, dropped, z)
@@ -4651,9 +4526,9 @@ def binary_scores_append_batch(
     _, _, per_group = _binary_score_groups(
         batch_df, score_col, label_col, None, score_decimals, pin=False
     )
-    per_group.select("_ok", "_s", "_np", "_nn", "_cnt").withColumn(
-        "batch_id", F.lit(int(batch_id)).cast("long")
-    ).write.mode("append").parquet(state_dir)
+    append_cells(
+        per_group.select("_ok", "_s", "_np", "_nn", "_cnt"), state_dir, batch_id
+    )
 
 
 def binary_scores_state_groups(spark, state_dir: str) -> DataFrame:
@@ -4661,17 +4536,7 @@ def binary_scores_state_groups(spark, state_dir: str) -> DataFrame:
     ``(_ok, _s, _np, _nn, _cnt)`` relation the one-shot reports build
     from raw rows: MAX-collapse replay duplicates per
     (batch_id, _ok, _s), then SUM across batches."""
-    state = spark.read.parquet(state_dir)
-    per_batch = state.groupBy("batch_id", "_ok", "_s").agg(
-        F.max("_np").alias("_np"),
-        F.max("_nn").alias("_nn"),
-        F.max("_cnt").alias("_cnt"),
-    )
-    return per_batch.groupBy("_ok", "_s").agg(
-        F.sum("_np").cast("long").alias("_np"),
-        F.sum("_nn").cast("long").alias("_nn"),
-        F.sum("_cnt").cast("long").alias("_cnt"),
-    )
+    return read_cells(spark, state_dir, ("_ok", "_s"))
 
 
 def auc_from_store(spark, state_dir: str) -> DataFrame:
@@ -5899,9 +5764,7 @@ def pass_at_k_append_batch(
         .cast("long")
         .alias("_dropped"),
     )
-    per_task.unionByName(dropped_row).withColumn(
-        "batch_id", F.lit(int(batch_id)).cast("long")
-    ).write.mode("append").parquet(state_dir)
+    append_cells(per_task.unionByName(dropped_row), state_dir, batch_id)
 
 
 def pass_at_k_state_tasks(spark, state_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -5909,21 +5772,9 @@ def pass_at_k_state_tasks(spark, state_dir: str) -> tuple[DataFrame, DataFrame]:
     ``(_task, _n, _c)`` per-task relation (replay duplicates
     MAX-collapsed per (batch_id, task), then attempt pools SUMMED per
     task across batches) and the one-row dropped-count frame."""
-    state = spark.read.parquet(state_dir)
-    per_batch = state.groupBy("batch_id", "_task").agg(
-        F.max("_n").alias("_n"),
-        F.max("_c").alias("_c"),
-        F.max("_dropped").alias("_dropped"),
-    )
-    tasks = (
-        per_batch.where(F.col("_task").isNotNull())
-        .groupBy("_task")
-        .agg(
-            F.sum("_n").cast("long").alias("_n"),
-            F.sum("_c").cast("long").alias("_c"),
-        )
-    )
-    dropped = per_batch.where(F.col("_task").isNull()).agg(
+    cells = read_cells(spark, state_dir, ("_task",))
+    tasks = cells.where(F.col("_task").isNotNull()).drop("_dropped")
+    dropped = cells.where(F.col("_task").isNull()).agg(
         F.coalesce(F.sum("_dropped"), F.lit(0))
         .cast("long")
         .alias("n_rows_dropped")

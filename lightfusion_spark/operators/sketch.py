@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .storemaint import atomic_replace, collapse_replays
+
 
 def _probe_positions(col: Column, w: int, d: int, seed: int) -> list[Column]:
     """``d`` positions in ``[0, w)`` from ONE md5 digest of ``seed:value``
@@ -203,8 +205,6 @@ def hll_compact_state(
     catch the store between the overwrite's delete and its write, and
     the pre-overwrite ``localCheckpoint`` the in-place write needed
     is gone with the in-place write)."""
-    from .storemaint import atomic_replace
-
     state = spark.read.parquet(state_dir)
     compacted = state.groupBy(stratum_col).agg(
         F.max("batch_id").alias("batch_id"),
@@ -273,9 +273,7 @@ def _split_state(state: DataFrame, cnt_col: str, fence):
     raw = state.where(F.col("segment") == "raw")
     if fence is not None:
         raw = raw.where(F.col("batch_id") > fence)
-    deduped = raw.groupBy(*cell_cols, "batch_id").agg(
-        F.max(cnt_col).alias(cnt_col)
-    )
+    deduped = collapse_replays(raw.drop("segment"), cell_cols)
     compacted = state.where(F.col("segment") == "compacted")
     return cell_cols, compacted, deduped
 
@@ -328,7 +326,6 @@ def sketch_compact_state(
     :func:`~lightfusion_spark.operators.storemaint.atomic_replace`
     (r17 — staging write + two-rename swap; the pre-overwrite
     ``localCheckpoint`` went with the in-place write)."""
-    from .storemaint import atomic_replace
     state = spark.read.parquet(state_dir)
     fence = _probe_fence(state)
     cell_cols, compacted, deduped = _split_state(state, cnt_col, fence)

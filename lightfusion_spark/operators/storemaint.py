@@ -1,85 +1,157 @@
-"""Generic layout maintenance for batch-appended CELL stores — the
-small-files half of the store family's lifecycle (r16 verdict item 3).
+"""The batch-addressed cell store — ONE mechanism behind every additive
+maintained store (the BLEU/chrF/WER/ROUGE/QA/win-rate/binary-score/
+pass@k eval-metric stores, the ranking store, and the raw segment of
+the additive sketch store) — plus its layout maintenance.
 
-Every maintained store in this repo (the eval-metric cell stores —
-BLEU/chrF/WER/ROUGE/QA/ranking/winrate, the binary-score store — the
-conversation-dedup relations, the additive sketch store) follows one
-append discipline: each batch appends rows that are a DETERMINISTIC
-function of the batch's data, tagged with a ``batch_id``, and the read
-side collapses replay duplicates (MAX per cell-and-batch, or a
-full-row drop) before summing.  The cheapest correct append is one
-parquet file per batch — so a long-lived store accumulates one file
-per batch forever, and every read pays a task per file.  The sketch
-stores solved this with a semantic fold (``sketch_compact_state`` — a
-fence plus cell summation); the IVF index with a validated rewrite
-(``ivf_compact``).  This module is the store-agnostic version of the
-latter: a PHYSICAL rewrite that never interprets the cells.
+The format: each batch appends its cells — rows that are a
+DETERMINISTIC function of the batch's data, at most one row per key —
+tagged with a ``batch_id`` long (:func:`append_cells`, one parquet
+append per batch).  The replay policy: a batch replayed after
+checkpoint recovery re-appends bit-identical rows under the same
+``batch_id``, so the read side takes the MAX of every cell column per
+(keys, ``batch_id``) — the identity on a clean store
+(:func:`collapse_replays`) — then sums each cell across batches per
+key, coalesced to zero and cast back to the column's own type
+(:func:`cell_sums`).  :func:`read_cells` is the two steps together.
 
-:func:`compact_cell_store` works on any append-dir whose rows carry a
-``batch_id`` column because it only ever collapses BIT-IDENTICAL full
-rows — exactly the rows a replayed batch re-appends (appends are
-deterministic, the family contract), and never two distinct logical
-rows (within a batch, cells are grouped per key — one row each; across
-batches, ``batch_id`` differs).  Streamed-equals-one-shot parity
-therefore survives compaction bit for bit, replay stays addressable
-(batch ids live in the rows, untouched), and a post-compaction replay
-of an already-applied batch re-appends rows the read side still
-collapses — all test-pinned in ``tests/test_storemaint.py``.
+Adding a store is three pieces: a cells fold shared with the one-shot
+metric (its groupBy keys become the store keys), ``append_cells`` in
+the ``*_append_batch`` body, and ``read_cells`` feeding the one-shot's
+finisher VERBATIM in ``*_from_store`` — so streamed == one-shot is an
+identity of the expression tree.  Stores with other replay regimes
+(the annotation store's MIN-resolve, the HLL union, the conversation
+and IVF stores) do not use these helpers.
+
+Maintenance: the cheapest correct append is one parquet file per
+batch, so a long-lived store accumulates one file per batch forever.
+:func:`compact_cell_store` is the store-agnostic PHYSICAL rewrite: it
+only ever collapses BIT-IDENTICAL full rows — exactly the rows a
+replayed batch re-appends, and never two distinct logical rows — so
+streamed-equals-one-shot parity survives compaction bit for bit and
+replay stays addressable (batch ids live in the rows, untouched), all
+test-pinned in ``tests/test_storemaint.py``.  :func:`atomic_replace`
+is the crash-safe whole-relation replacement for SEMANTIC rewrites
+(the HLL union-fold, the sketch fence fold, the CDC snapshot); both go
+through one staging-write + two-rename swap.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def atomic_replace(spark: SparkSession, df: DataFrame, path: str) -> None:
-    """Crash-safe whole-relation replacement for maintained stores —
-    the write-side half of the :func:`compact_cell_store` contract,
-    factored out for stores whose replacement is SEMANTIC (the HLL
-    union-fold, the additive-sketch fence fold, the CDC snapshot)
-    rather than a row-identical rewrite (r17; closes a real
-    crash-recovery hole: ``mode("overwrite")`` on the directory being
-    replaced deletes it BEFORE writing, so a crash in between loses
-    the store — and in the CDC ``foreachBatch`` case the streaming
-    replay then sees "no store" and silently rebuilds from the
-    arriving batch alone, exactly the prior-state discard its
-    existence probe exists to prevent).
+def append_cells(cells: DataFrame, path: str, batch_id: int) -> None:
+    """Append one batch's cells to the store at ``path`` as
+    ``(cells..., batch_id)`` parquet rows."""
+    cells.withColumn("batch_id", F.lit(int(batch_id)).cast("long")).write.mode(
+        "append"
+    ).parquet(path)
 
-    ``df`` MAY lazily read from ``path``: the plan materializes into a
-    sibling ``{path}_staging`` directory first (which also makes the
-    defensive pre-overwrite ``localCheckpoint`` the old call sites
-    carried unnecessary — one materialization instead of two), then
-    the two-rename swap replaces the live directory.  Crash windows:
-    before the first rename the store is untouched; between renames
-    ``{path}_pre`` holds the original (recover by renaming back) and
-    the next call REFUSES until an operator resolves it; a stale
-    ``_staging`` never blocks a retry.
-    """
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
+
+def collapse_replays(
+    state: DataFrame, keys: Sequence[str] = ()
+) -> DataFrame:
+    """MAX of every cell column per (``keys``, ``batch_id``): replays
+    write identical values, so MAX is the identity on clean stores."""
+    cells = [c for c in state.columns if c not in keys and c != "batch_id"]
+    return state.groupBy(*keys, "batch_id").agg(
+        *[F.max(c).alias(c) for c in cells]
+    )
+
+
+def cell_sums(
+    per_batch: DataFrame, keys: Sequence[str] = ()
+) -> list[Column]:
+    """One sum per cell column (everything but ``keys`` and
+    ``batch_id``), coalesced to zero and cast back to the column's own
+    type."""
+    return [
+        F.coalesce(F.sum(c), F.lit(0)).cast(t).alias(c)
+        for c, t in per_batch.dtypes
+        if c not in keys and c != "batch_id"
+    ]
+
+
+def read_cells(
+    spark: SparkSession, path: str, keys: Sequence[str] = ()
+) -> DataFrame:
+    """The store at ``path`` read back to one summed cell row per key
+    (one row in all when ``keys`` is empty), replays collapsed."""
+    per_batch = collapse_replays(spark.read.parquet(path), keys)
+    return per_batch.groupBy(*keys).agg(*cell_sums(per_batch, keys))
+
+
+def _swap_in(spark, path: str, who: str, suffix: str, write, carry=False):
+    """The one crash-safe replacement routine: ``write(tmp)`` fills a
+    sibling ``{path}{suffix}`` staging directory (and may validate it —
+    raising leaves the live store untouched), then a two-rename swap
+    replaces ``path``.  Crash windows: before the first rename the
+    store is untouched; between renames ``{path}_pre`` holds the
+    original and every later call REFUSES until an operator renames it
+    back or removes it (it may be the only copy); a stale staging
+    directory never blocks a retry.  ``carry`` moves ``_``-prefixed
+    side relations (manifests) the new layout lacks from the old
+    directory into the new.  Returns what ``write`` returns."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
     fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
     pre = f"{path}_pre"
     if fs.exists(hpath(pre)):
         raise RuntimeError(
-            f"atomic_replace: {pre} exists — a previous replacement "
-            "crashed mid-swap and it may be the only copy of the store; "
-            "rename it back over the store (or remove it after "
-            "verifying the store reads) before retrying"
+            f"{who}: {pre} exists — a previous run crashed mid-swap and "
+            "it may be the only copy of the store; rename it back over "
+            "the store (or remove it after verifying the store reads) "
+            "before retrying"
         )
-    tmp = f"{path}_staging"
+    tmp = f"{path}{suffix}"
     if fs.exists(hpath(tmp)):
         fs.delete(hpath(tmp), True)
-    df.write.mode("error").parquet(tmp)
+    out = write(tmp)
     had_prior = fs.exists(hpath(path))
     if had_prior and not fs.rename(hpath(path), hpath(pre)):
-        raise RuntimeError(f"atomic_replace: could not stage {path}")
+        raise RuntimeError(f"{who}: could not stage {path}")
     if not fs.rename(hpath(tmp), hpath(path)):
         if had_prior:
             fs.rename(hpath(pre), hpath(path))
-        raise RuntimeError(f"atomic_replace: could not swap in {tmp}")
+        raise RuntimeError(f"{who}: could not swap in {tmp}")
+    if had_prior and carry:
+        # same-named artifacts the write already produced (_SUCCESS) stay
+        for st in fs.listStatus(hpath(pre)):
+            name = st.getPath().getName()
+            if name.startswith("_") and not fs.exists(
+                hpath(f"{path}/{name}")
+            ):
+                fs.rename(st.getPath(), hpath(f"{path}/{name}"))
     if had_prior:
         fs.delete(hpath(pre), True)
+    return out
+
+
+def atomic_replace(spark: SparkSession, df: DataFrame, path: str) -> None:
+    """Crash-safe whole-relation replacement for maintained stores
+    whose replacement is SEMANTIC (the HLL union-fold, the
+    additive-sketch fence fold, the CDC snapshot) rather than a
+    row-identical rewrite.  ``mode("overwrite")`` on the directory
+    being replaced deletes it BEFORE writing, so a crash in between
+    loses the store — and in the CDC ``foreachBatch`` case the
+    streaming replay then sees "no store" and silently rebuilds from
+    the arriving batch alone.
+
+    ``df`` MAY lazily read from ``path``: the plan materializes into a
+    sibling ``{path}_staging`` directory first (one materialization,
+    no defensive ``localCheckpoint``), then the swap of
+    :func:`_swap_in` replaces the live directory; a first write (no
+    prior store) simply lands.
+    """
+    _swap_in(
+        spark,
+        path,
+        "atomic_replace",
+        "_staging",
+        lambda tmp: df.write.mode("error").parquet(tmp),
+    )
 
 
 def compact_cell_store(
@@ -94,16 +166,11 @@ def compact_cell_store(
     * validate-then-swap: the rewrite lands in a sibling
       ``{path}_compacting`` directory and must hold exactly the
       source's distinct row count AND the full ``batch_id`` set
-      before the two-rename swap replaces the live directory — a torn
-      rewrite aborts with the store untouched;
+      before the swap of :func:`_swap_in` replaces the live directory
+      — a torn rewrite aborts with the store untouched;
     * ``_``-prefixed side relations (e.g. the binary-score store's
       ``_meta`` manifest) ride along: parquet reads never see them,
       and the swap carries them from the old directory into the new;
-    * an aborted run's temp directory never blocks the retry (deleted
-      and rewritten); a crash mid-swap leaves ``{path}_pre`` on disk
-      — never data loss; the next run REFUSES until an operator
-      renames it back or removes it (unlike the temp dir, ``_pre``
-      may be the only copy of the data);
     * run offline (no concurrent appends), the standard maintenance
       contract; file counts come from the Hadoop ``FileSystem`` glob
       (portable beyond local disk).
@@ -116,26 +183,21 @@ def compact_cell_store(
     ``coalesce(target_files)`` write is the whole cost; reads
     afterwards open ``target_files`` files instead of one per batch.
     """
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
     fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
 
     def _files(p: str) -> int:
         stats = fs.globStatus(hpath(f"{p}/*.parquet"))
         return 0 if stats is None else len(stats)
 
+    def _batches(df: DataFrame) -> set:
+        rows = df.select("batch_id").distinct().collect()
+        return {r["batch_id"] for r in rows}
+
     if int(target_files) < 1:
         raise ValueError(
             f"compact_cell_store: target_files must be >= 1, got "
             f"{target_files}"
-        )
-    pre = f"{path}_pre"
-    if fs.exists(hpath(pre)):
-        raise RuntimeError(
-            f"compact_cell_store: {pre} exists — a previous run crashed "
-            "mid-swap and it may be the only copy of the store; rename "
-            "it back over the store (or remove it after verifying the "
-            "store reads) before compacting"
         )
     src = spark.read.parquet(path)
     if "batch_id" not in src.columns:
@@ -145,49 +207,33 @@ def compact_cell_store(
             "bit-identical replay rows, which only batch-addressed "
             "stores guarantee)"
         )
-    files_before = _files(path)
-    n_src = src.count()
-    # bit-identical replay residue ONLY: full-row distinct
-    kept = src.dropDuplicates()
-    n_kept = kept.count()
-    batches = {
-        r["batch_id"] for r in src.select("batch_id").distinct().collect()
-    }
-    tmp = f"{path}_compacting"
-    if fs.exists(hpath(tmp)):
-        fs.delete(hpath(tmp), True)
-    kept.coalesce(int(target_files)).write.mode("error").parquet(tmp)
-    written = spark.read.parquet(tmp)
-    got = written.count()
-    got_batches = {
-        r["batch_id"]
-        for r in written.select("batch_id").distinct().collect()
-    }
-    if got != n_kept or got_batches != batches:
-        raise RuntimeError(
-            f"compact_cell_store: rewrite holds {got} rows over "
-            f"{len(got_batches)} batches but the source scan kept "
-            f"{n_kept} over {len(batches)} at {path} — aborting with "
-            f"the live store untouched; inspect {tmp}"
-        )
-    if not fs.rename(hpath(path), hpath(pre)):
-        raise RuntimeError(f"compact_cell_store: could not stage {path}")
-    if not fs.rename(hpath(tmp), hpath(path)):
-        fs.rename(hpath(pre), hpath(path))
-        raise RuntimeError(f"compact_cell_store: could not swap in {tmp}")
-    # carry _-prefixed side relations (manifests) into the new layout;
-    # same-named artifacts the write already produced (_SUCCESS) stay
-    for st in fs.listStatus(hpath(pre)):
-        name = st.getPath().getName()
-        if name.startswith("_") and not fs.exists(
-            hpath(f"{path}/{name}")
-        ):
-            fs.rename(st.getPath(), hpath(f"{path}/{name}"))
-    fs.delete(hpath(pre), True)
-    return {
-        "rows": int(got),
-        "rows_collapsed": int(n_src - n_kept),
-        "batches": len(batches),
-        "files_before": files_before,
-        "files_after": _files(path),
-    }
+
+    def write(tmp: str) -> dict:
+        files_before = _files(path)
+        n_src = src.count()
+        # bit-identical replay residue ONLY: full-row distinct
+        kept = src.dropDuplicates()
+        n_kept = kept.count()
+        batches = _batches(src)
+        kept.coalesce(int(target_files)).write.mode("error").parquet(tmp)
+        written = spark.read.parquet(tmp)
+        got = written.count()
+        got_batches = _batches(written)
+        if got != n_kept or got_batches != batches:
+            raise RuntimeError(
+                f"compact_cell_store: rewrite holds {got} rows over "
+                f"{len(got_batches)} batches but the source scan kept "
+                f"{n_kept} over {len(batches)} at {path} — aborting with "
+                f"the live store untouched; inspect {tmp}"
+            )
+        return {
+            "rows": int(got),
+            "rows_collapsed": int(n_src - n_kept),
+            "batches": len(batches),
+            "files_before": files_before,
+        }
+
+    stats = _swap_in(
+        spark, path, "compact_cell_store", "_compacting", write, carry=True
+    )
+    return {**stats, "files_after": _files(path)}

@@ -267,3 +267,93 @@ def test_zero_missing_type_default_direction():
     assert m2.predict_raw(np.array([[0.0, 0.0]]))[0, 0] == 10.0
     # NaN under missing=Zero converts to 0.0 then takes the default branch
     assert m.predict_raw(np.array([[np.nan, 0.0]]))[0, 0] == 20.0
+
+
+# Models LightGBMModel.predict would mis-score: each is SIMPLE_MODEL with
+# one objective or flag change, rejected at parse (so at CREATE FUNCTION).
+_LINEAR_TREE = """is_linear=1
+leaf_const=1 2 3
+num_features=1 0 0
+leaf_features=0
+leaf_coeff=0.5
+shrinkage=1
+"""
+_UNSCORABLE = {
+    "poisson": ("objective=regression", "objective=poisson"),
+    "gamma": ("objective=regression", "objective=gamma"),
+    "tweedie": (
+        "objective=regression",
+        "objective=tweedie tweedie_variance_power:1.5",
+    ),
+    "cross_entropy_lambda": (
+        "objective=regression",
+        "objective=cross_entropy_lambda",
+    ),
+    "sqrt": ("objective=regression", "objective=regression sqrt"),
+    "binary_sigmoid_2": ("objective=regression", "objective=binary sigmoid:2"),
+    "multiclassova_sigmoid_half": (
+        "objective=regression",
+        "objective=multiclassova num_class:1 sigmoid:0.5",
+    ),
+    "average_output": (
+        "objective=regression\n",
+        "objective=regression\naverage_output\n",
+    ),
+    "is_linear": ("shrinkage=1\n", _LINEAR_TREE),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_UNSCORABLE))
+def test_unscorable_model_rejected_by_name(case, tmp_path):
+    from lightfusion_spark.errors import UnsupportedModelError
+    from lightfusion_spark.functions.inference import make_lightgbm_udf
+
+    old, new = _UNSCORABLE[case]
+    assert old in SIMPLE_MODEL
+    text = SIMPLE_MODEL.replace(old, new)
+    with pytest.raises(UnsupportedModelError):
+        parse_model_str(text)
+    # CREATE FUNCTION validates through the same parse, before any Spark work
+    path = tmp_path / "bad.lgbm"
+    path.write_text(text)
+    with pytest.raises(UnsupportedModelError):
+        make_lightgbm_udf(str(path))
+
+
+@pytest.mark.parametrize(
+    "objective",
+    [
+        "binary sigmoid:1",
+        "multiclassova num_class:1 sigmoid:1",
+        "cross_entropy",
+        "regression_l1",
+    ],
+)
+def test_scorable_objectives_still_parse(objective):
+    text = SIMPLE_MODEL.replace(
+        "objective=regression", f"objective={objective}"
+    )
+    assert parse_model_str(text).objective == objective
+
+
+def test_committed_and_benchmark_models_still_parse():
+    import glob
+    import os
+
+    from perfbench import gen
+
+    models = glob.glob(
+        os.path.join(
+            os.path.dirname(__file__),
+            "..",
+            "lightfusion_spark",
+            "fixtures",
+            "models",
+            "*.lgbm",
+        )
+    )
+    assert len(models) == 4
+    for path in models:
+        with open(path, encoding="utf-8") as fh:
+            assert parse_model_str(fh.read()).trees
+    assert len(parse_model_str(gen.model_text(0)).trees) == 500
