@@ -1,7 +1,7 @@
 """LightGBM inference as an Arrow-vectorized pandas UDF.
 
 Reference counterpart: the ``LightfusionUdf`` scalar UDF (``src/udf.rs``):
-Arrow ``List<Float>`` column in, micro-batched ``Booster::predict`` calls,
+Arrow ``List<Float>`` column in, ``Booster::predict`` calls,
 ``List<Float64>`` out (n_classes values per input row).
 
 Spark-first design decisions:
@@ -13,14 +13,19 @@ Spark-first design decisions:
   threads (``src/lib.rs:64``, ``src/udf.rs:100-112``).
 * **Per-executor model cache** — a module-level registry keyed by model
   path; each executor process parses the model text once, on first use.
-  The UDF closure captures only (path, batch_size, n_features), all
-  picklable.
-* **Micro-batching parity** — rows are scored in chunks of ``batch_size``
-  with a partial tail chunk, exactly like the reference's batching loop
-  (``src/udf.rs:181-192``, ``end = min(start + batch_size, n_rows)`` at
-  ``src/udf.rs:209``).  ``batch_size`` is captured at function-creation
-  time from ``lightfusion.batch_size`` (``src/lib.rs:57-66``), not read
-  per call.
+  The UDF closure captures only the cache key, the model text (or its
+  broadcast) and n_features, all picklable.
+* **One ``predict`` call per Arrow batch** — the reference scores rows in
+  chunks of ``batch_size`` with a partial tail chunk (``src/udf.rs:181-192``,
+  ``end = min(start + batch_size, n_rows)`` at ``src/udf.rs:209``).  Here
+  ``batch_size`` is still read from ``lightfusion.batch_size`` at
+  function-creation time (``src/lib.rs:57-66``), validated and shown by
+  ``df_settings``, but it no longer splits work: every row is scored
+  independently (per-tree sums in tree order, softmax along the row), so
+  one call over the whole Arrow batch gives the same bits as any chunking
+  and the per-call traversal cost is paid once per batch, not once per
+  chunk.  Memory per call is bounded by the Arrow batch,
+  ``spark.sql.execution.arrow.maxRecordsPerBatch``.
 * **Type gating at registration** — input element type must be FLOAT or
   DOUBLE and return element type DOUBLE, mirroring the reference's
   dispatch arms and explicit rejection (``src/udf.rs:15-47``).
@@ -85,13 +90,13 @@ def _assemble_features(series: pd.Series, n_features: int) -> np.ndarray:
             "rows have a NULL feature array; feature vectors must be non-null "
             f"ARRAY<FLOAT|DOUBLE> of length {n_features}"
         )
-    flat = np.concatenate(arrs, dtype=np.float64, casting="unsafe")
-    if flat.size != len(arrs) * n_features:
-        lengths = {len(a) for a in arrs}
+    lengths = np.fromiter(map(len, arrs), dtype=np.int64, count=len(arrs))
+    if (lengths != n_features).any():
         raise ValueError(
-            f"lightfusion inference: feature vector length(s) {sorted(lengths)} "
-            f"!= model n_features {n_features}"
+            f"lightfusion inference: feature vector length(s) "
+            f"{np.unique(lengths).tolist()} != model n_features {n_features}"
         )
+    flat = np.concatenate(arrs, dtype=np.float64, casting="unsafe")
     return flat.reshape(len(arrs), n_features)
 
 
@@ -117,6 +122,9 @@ def make_lightgbm_udf(
     receives one copy via the torrent protocol instead of one copy per
     task.  Either way the parsed model is cached per executor process
     keyed by content digest.
+
+    ``batch_size`` must be positive but does not change how rows are
+    scored: each Arrow batch goes through one ``predict`` call.
     """
     if input_type not in SUPPORTED_INPUT_TYPES:
         raise UnsupportedTypeError(
@@ -151,17 +159,12 @@ def make_lightgbm_udf(
         shipped = model_broadcast.value if model_broadcast is not None else model_text
         mdl = _get_model(cache_key, shipped)
         for series in batches:
-            n_rows = len(series)
-            if n_rows == 0:
+            if len(series) == 0:
                 yield pd.Series([], dtype=object)
                 continue
-            feats = _assemble_features(series, n_features)
-            out = np.empty((n_rows, mdl.n_outputs), dtype=np.float64)
-            # Micro-batching loop with partial tail chunk (src/udf.rs:181-192,209)
-            for start in range(0, n_rows, batch_size):
-                end = min(start + batch_size, n_rows)
-                out[start:end] = mdl.predict(feats[start:end])
-            yield pd.Series(list(out))
+            # One call per Arrow batch: rows score independently, so the bits
+            # do not depend on how rows are chunked.
+            yield pd.Series(list(mdl.predict(_assemble_features(series, n_features))))
 
     return predict
 

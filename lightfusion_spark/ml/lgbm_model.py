@@ -50,10 +50,15 @@ applies ``exp``/``log1p(exp)``), a ``sqrt`` objective flag, a
 ``average_output`` (random-forest models) and linear trees
 (``is_linear=1``).
 
-Traversal is vectorized over rows with NumPy (no Python-per-row loop): an
-integer ``node`` vector descends all rows simultaneously, masking out rows
-that already reached a leaf.  Tree depth bounds the loop, so scoring a batch
-is O(depth × n_rows) NumPy ops regardless of batch size.
+Traversal is vectorized over rows with NumPy (no Python-per-row loop).
+Each node's decision fields — default-left, missing-type Zero, the route a
+NaN takes, categorical — are derived from ``decision_type`` once, when the
+tree is built.  Per tree, a shrinking array of active row indices descends
+level by level, and rows drop out of it as they reach a leaf.  Tree depth
+bounds the loop, so one call costs O(depth) NumPy ops per tree whatever the
+row count: scoring a whole batch in one call is far cheaper than scoring it
+in chunks, and gives the same bits, because every row is scored on its own
+(per-tree sums in tree order, the softmax along the row).
 """
 
 from __future__ import annotations
@@ -92,6 +97,30 @@ class Tree:
     cat_boundaries: np.ndarray | None = None
     cat_threshold: np.ndarray | None = None
 
+    def __post_init__(self) -> None:
+        # Per-node decision fields, derived once from ``decision_type`` so
+        # that traversal decodes no bits.
+        dtyp = self.decision_type
+        missing_type = (dtyp >> 2) & 3
+        self._default_left = (dtyp & _DEFAULT_LEFT_MASK) != 0
+        self._missing_zero = missing_type == _MISSING_TYPE_ZERO
+        self._has_zero_missing = np.count_nonzero(self._missing_zero) > 0
+        self._categorical = (dtyp & _CATEGORICAL_MASK) != 0
+        self._has_categorical = np.count_nonzero(self._categorical) > 0
+        if self._has_categorical and self.cat_boundaries is None:
+            raise ValueError(
+                "decision_type marks a categorical split but the tree has no "
+                "cat_boundaries/cat_threshold section"
+            )
+        # Where a NaN goes at each numerical node: missing-type NaN takes the
+        # default branch; otherwise NaN counts as 0.0, which missing-type
+        # Zero sends the default way and missing-type None compares.
+        self._nan_left = np.where(
+            (missing_type == _MISSING_TYPE_NAN) | self._missing_zero,
+            self._default_left,
+            0.0 <= self.threshold,
+        )
+
     def _categorical_go_left(self, vals: np.ndarray, thr: np.ndarray) -> np.ndarray:
         """Vectorized ``Tree::CategoricalDecision`` (LightGBM tree.h):
         membership of ``trunc(value)`` in the node's uint32 bitset goes
@@ -114,44 +143,36 @@ class Tree:
         if self.num_leaves <= 1:
             return np.full(n_rows, self.leaf_value[0], dtype=np.float64)
 
-        node = np.zeros(n_rows, dtype=np.int64)  # all rows start at the root
-        active = np.ones(n_rows, dtype=bool)
-        # depth can't exceed num_leaves - 1 for any binary tree
-        for _ in range(self.num_leaves):
-            if not active.any():
-                break
-            idx = node[active]
-            feat = self.split_feature[idx]
-            thr = self.threshold[idx]
-            dtyp = self.decision_type[idx]
-            vals = features[active, feat]
-
-            is_nan = np.isnan(vals)
-            missing_type = (dtyp >> 2) & 3
-            default_left = (dtyp & _DEFAULT_LEFT_MASK) != 0
-            # LightGBM NumericalDecision semantics:
-            #   missing_type != NaN  =>  NaN is converted to 0.0 first;
-            #   missing_type == Zero =>  |v| <= kZeroThreshold (1e-35) takes
-            #                            the default_left branch;
-            #   missing_type == NaN  =>  NaN takes the default_left branch.
-            num_vals = np.where(is_nan & (missing_type != _MISSING_TYPE_NAN), 0.0, vals)
-            use_default = (is_nan & (missing_type == _MISSING_TYPE_NAN)) | (
-                (missing_type == _MISSING_TYPE_ZERO) & (np.abs(num_vals) <= 1e-35)
-            )
-            go_left = np.where(use_default, default_left, num_vals <= thr)
-
-            is_cat = (dtyp & _CATEGORICAL_MASK) != 0
-            if is_cat.any():
-                go_left = np.where(
-                    is_cat, self._categorical_go_left(vals, thr), go_left
-                )
-
-            nxt = np.where(go_left, self.left_child[idx], self.right_child[idx])
-            node[active] = nxt
-            active = node >= 0
-
-        leaf_idx = -node - 1  # ~c for negative child encoding
-        return self.leaf_value[leaf_idx]
+        out = np.empty(n_rows, dtype=np.float64)
+        rows = np.arange(n_rows)  # rows still descending; all start at the root
+        node = np.zeros(n_rows, dtype=np.int64)
+        for _ in range(self.num_leaves - 1):  # the longest root-to-leaf path
+            thr = self.threshold[node]
+            vals = features[rows, self.split_feature[node]]
+            # LightGBM NumericalDecision: ``value <= threshold``, except a
+            # NaN takes its node's precomputed route and, at missing-type
+            # Zero nodes, |value| <= kZeroThreshold (1e-35) the default one.
+            go_left = (vals <= thr) | (np.isnan(vals) & self._nan_left[node])
+            if self._has_zero_missing:
+                is_zero = self._missing_zero[node] & (np.abs(vals) <= 1e-35)
+                go_left = np.where(is_zero, self._default_left[node], go_left)
+            if self._has_categorical:
+                cat = self._categorical[node]
+                go_left[cat] = self._categorical_go_left(vals[cat], thr[cat])
+            node = np.where(go_left, self.left_child[node], self.right_child[node])
+            at_leaf = node < 0
+            n_done = np.count_nonzero(at_leaf)
+            if n_done:
+                out[rows[at_leaf]] = self.leaf_value[~node[at_leaf]]  # leaf ~c
+                if n_done == len(node):
+                    return out
+                descending = ~at_leaf
+                rows = rows[descending]
+                node = node[descending]
+        raise ValueError(
+            f"malformed tree: a path from the root is longer than its "
+            f"{self.num_leaves - 1} splits (the child links form a cycle)"
+        )
 
 
 @dataclass
@@ -210,6 +231,15 @@ class LightGBMModel:
         return raw
 
 
+def _ints(text: str) -> np.ndarray:
+    return np.array(text.split(), dtype=np.int64)
+
+
+def _floats(text: str) -> np.ndarray:
+    # NumPy converts each token with Python's own float(): the same bits
+    return np.array(text.split(), dtype=np.float64)
+
+
 def _parse_kv(line: str) -> tuple[str, str]:
     key, _, value = line.partition("=")
     return key.strip(), value.strip()
@@ -259,19 +289,15 @@ def parse_model_str(text: str) -> LightGBMModel:
             )
         num_leaves = int(cur["num_leaves"])
         dtyp = (
-            np.array([int(x) for x in cur["decision_type"].split()], dtype=np.int64)
+            _ints(cur["decision_type"])
             if cur.get("decision_type")
             else np.full(max(num_leaves - 1, 0), 2, dtype=np.int64)
         )
         num_cat = int(cur.get("num_cat", "0"))
         cat_boundaries = cat_threshold = None
         if num_cat > 0:
-            cat_boundaries = np.array(
-                [int(x) for x in cur["cat_boundaries"].split()], dtype=np.int64
-            )
-            cat_threshold = np.array(
-                [int(x) for x in cur["cat_threshold"].split()], dtype=np.int64
-            )
+            cat_boundaries = _ints(cur["cat_boundaries"])
+            cat_threshold = _ints(cur["cat_threshold"])
             if len(cat_boundaries) != num_cat + 1:
                 raise ValueError(
                     f"cat_boundaries has {len(cat_boundaries)} entries, "
@@ -282,30 +308,15 @@ def parse_model_str(text: str) -> LightGBMModel:
                     "cat_boundaries does not cover cat_threshold: "
                     f"last offset {cat_boundaries[-1]} != {len(cat_threshold)} words"
                 )
-        elif (dtyp & _CATEGORICAL_MASK).any():
-            raise ValueError(
-                "decision_type marks a categorical split but the tree has no "
-                "cat_boundaries/cat_threshold section"
-            )
         trees.append(
             Tree(
                 num_leaves=num_leaves,
-                split_feature=np.array(
-                    [int(x) for x in cur.get("split_feature", "").split()], dtype=np.int64
-                ),
-                threshold=np.array(
-                    [float(x) for x in cur.get("threshold", "").split()], dtype=np.float64
-                ),
+                split_feature=_ints(cur.get("split_feature", "")),
+                threshold=_floats(cur.get("threshold", "")),
                 decision_type=dtyp,
-                left_child=np.array(
-                    [int(x) for x in cur.get("left_child", "").split()], dtype=np.int64
-                ),
-                right_child=np.array(
-                    [int(x) for x in cur.get("right_child", "").split()], dtype=np.int64
-                ),
-                leaf_value=np.array(
-                    [float(x) for x in cur["leaf_value"].split()], dtype=np.float64
-                ),
+                left_child=_ints(cur.get("left_child", "")),
+                right_child=_ints(cur.get("right_child", "")),
+                leaf_value=_floats(cur["leaf_value"]),
                 shrinkage=float(cur.get("shrinkage", "1")),
                 cat_boundaries=cat_boundaries,
                 cat_threshold=cat_threshold,

@@ -402,8 +402,9 @@ def quality_model_filter(
     avg_word_len, punct_ratio, en_stop_ratio) assembled JVM-side into
     one ``array<double>``; the classifier runs through the same
     Arrow-batched iterator pandas UDF as every other model in the repo
-    (per-executor parsed-model cache, micro-batched with partial tail —
-    ``functions/inference.py``).  ``p_keep`` is the softmax probability
+    (per-executor parsed-model cache, one ``predict`` call per Arrow
+    batch — ``functions/inference.py``; ``batch_size`` is validated
+    but no longer splits the batch).  ``p_keep`` is the softmax probability
     of class 1 rounded to 6 digits BEFORE the gate compares it to
     ``threshold``, so the keep decision is engine-reproducible.
 

@@ -357,3 +357,172 @@ def test_committed_and_benchmark_models_still_parse():
         with open(path, encoding="utf-8") as fh:
             assert parse_model_str(fh.read()).trees
     assert len(parse_model_str(gen.model_text(0)).trees) == 500
+
+
+# A tree that mixes the two split kinds at one depth: node 1 is categorical
+# (index 0 into cat_boundaries), node 2 numerical with a threshold far past
+# the number of categorical splits.
+MIXED_DEPTH_MODEL = """tree
+version=v4
+num_class=1
+num_tree_per_iteration=1
+max_feature_idx=1
+objective=regression
+
+Tree=0
+num_leaves=4
+num_cat=1
+split_feature=0 1 1
+split_gain=1 1 1
+threshold=0.5 0 50.5
+decision_type=2 1 2
+left_child=1 -1 -3
+right_child=2 -2 -4
+cat_boundaries=0 1
+cat_threshold=37
+leaf_value=10 20 30 40
+shrinkage=1
+
+end of trees
+"""
+
+
+def test_categorical_and_numerical_nodes_at_one_depth():
+    """Rows reaching a categorical and a numerical node at the same level
+    are each routed by their own node's rule, in one call."""
+    m = parse_model_str(MIXED_DEPTH_MODEL)
+    out = m.predict_raw(np.array([
+        [0.0, 2.0],    # node 1: 2 in {0,2,5} -> leaf 0
+        [1.0, 2.0],    # node 2: 2 <= 50.5 -> leaf 2
+        [1.0, 60.0],   # node 2: 60 > 50.5 -> leaf 3
+        [0.0, 3.0],    # node 1: 3 not in set -> leaf 1
+    ]))
+    assert out[:, 0].tolist() == [10.0, 30.0, 40.0, 20.0]
+
+
+def _with_zero_missing(text: str) -> str:
+    """Turn every third plain numerical split (decision_type 2) into a
+    missing-type Zero one, alternating default-left (6) and -right (4)."""
+    out, n_plain = [], 0
+    for line in text.splitlines():
+        if line.startswith("decision_type="):
+            codes = line.split("=", 1)[1].split()
+            for i, code in enumerate(codes):
+                if code == "2":
+                    if n_plain % 3 == 0:
+                        codes[i] = "6" if n_plain % 2 else "4"
+                    n_plain += 1
+            line = "decision_type=" + " ".join(codes)
+        out.append(line)
+    return "\n".join(out) + "\n"
+
+
+def _committed_model(name: str) -> str:
+    from lightfusion_spark.fixtures import fixture_path
+
+    with open(fixture_path("models", name), encoding="utf-8") as fh:
+        return fh.read()
+
+
+def _bit_identity_models() -> dict[str, str]:
+    from perfbench import gen
+
+    models = {
+        name: _committed_model(name)
+        for name in ("multiclass.lgbm", "embed_cls.lgbm", "quality_cls.lgbm", "quality_cat.lgbm")
+    }
+    # 12 classes: past 8, NumPy's softmax sum along a row is pairwise
+    models["generated_12class"] = _with_zero_missing(
+        gen.model_text(5, iterations=4, num_class=12, num_leaves=15, num_features=9)
+    )
+    models["cat_mixed_depth"] = MIXED_DEPTH_MODEL
+    return models
+
+
+def _hostile_rows(n_features: int, n_rows: int = 64) -> np.ndarray:
+    """Rows with NaN, exact and signed zeros, sub-1e-35 values, negative,
+    fractional and out-of-bitset category codes."""
+    rng = np.random.default_rng(7)
+    x = np.round(rng.normal(0.0, 2.0, size=(n_rows, n_features)), 3)
+    cells = rng.random(x.shape)
+    x[cells < 0.12] = np.nan
+    x[(cells >= 0.12) & (cells < 0.2)] = 0.0
+    x[(cells >= 0.2) & (cells < 0.24)] = -0.0
+    x[(cells >= 0.24) & (cells < 0.28)] = 1e-40
+    # category-like codes in the first and last columns
+    for col in (0, n_features - 1):
+        x[::2, col] = rng.integers(-3, 70, size=len(x[::2]))
+        x[1::4, col] += 0.75
+    x[::9, :] = np.nan
+    return x
+
+
+@pytest.mark.parametrize("name", sorted(_bit_identity_models()))
+def test_predict_bits_do_not_depend_on_chunking(name):
+    """One call over the whole matrix gives the same bits as row-by-row and
+    ragged-chunk calls: every row is scored on its own.  The raw sums also
+    match, bit for bit, the row-wise pure-Python reference scorer."""
+    from perfbench import refscore
+
+    text = _bit_identity_models()[name]
+    m = parse_model_str(text)
+    x = _hostile_rows(m.num_features)
+    ref = refscore.RefModel(text)
+    assert np.array_equal(m.predict_raw(x), np.array([ref.raw(row) for row in x]))
+    whole = m.predict(x)
+    assert np.isfinite(whole).all()
+    for chunk in (1, 7, 64):
+        parts = np.concatenate(
+            [m.predict(x[s:s + chunk]) for s in range(0, len(x), chunk)]
+        )
+        assert np.array_equal(parts, whole), chunk
+
+
+def test_udf_body_calls_predict_once_per_arrow_batch(monkeypatch):
+    """At batch_size=1 the UDF body still makes one predict call per
+    non-empty Arrow batch, and none for an empty one."""
+    import pandas as pd
+
+    from lightfusion_spark.fixtures import fixture_path
+    from lightfusion_spark.functions.inference import make_lightgbm_udf
+    from lightfusion_spark.ml.lgbm_model import LightGBMModel
+
+    calls = []
+    original = LightGBMModel.predict
+
+    def counted(self, features):
+        calls.append(len(features))
+        return original(self, features)
+
+    monkeypatch.setattr(LightGBMModel, "predict", counted)
+    udf = make_lightgbm_udf(fixture_path("models", "multiclass.lgbm"), batch_size=1)
+    x = np.random.default_rng(3).normal(size=(30, 28))
+    batches = [pd.Series(list(x[:17])), pd.Series([], dtype=object), pd.Series(list(x[17:]))]
+    outs = list(udf.func(iter(batches)))
+    assert calls == [17, 13]
+    assert [len(o) for o in outs] == [17, 0, 13]
+
+
+def test_assemble_features_checks_each_row_length():
+    """Rows of 27 and 29 values hold 2 x 28 values in total but are not two
+    28-feature rows: rejected, naming the lengths."""
+    import pandas as pd
+
+    from lightfusion_spark.functions.inference import _assemble_features
+
+    series = pd.Series([np.zeros(27), np.zeros(29)])
+    with pytest.raises(ValueError, match=r"\[27, 29\] != model n_features 28"):
+        _assemble_features(series, 28)
+    ok = _assemble_features(pd.Series([np.arange(28.0), np.arange(28.0)]), 28)
+    assert ok.shape == (2, 28)
+
+
+def test_cyclic_tree_rejected_not_looped():
+    """A child link back to the root is malformed input: scoring raises
+    instead of descending forever."""
+    cyclic = SIMPLE_MODEL.replace("left_child=1 -1", "left_child=1 0")
+    m = parse_model_str(cyclic)
+    with pytest.raises(ValueError, match="cycle"):
+        m.predict_raw(np.array([[0.0, 0.0]]))
+    # rows that avoid the cycle are unaffected
+    assert m.predict_raw(np.array([[1.0, 0.0]]))[0, 0] == 20.0

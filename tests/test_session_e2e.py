@@ -125,8 +125,9 @@ def test_create_function_defaults(engine, fixture_model, tmp_path_factory):
 
 
 def test_batch_size_affects_chunking_not_results(engine, fixture_model):
-    """batch_size=1 vs 7 vs 500 give identical predictions (tail-chunk parity,
-    src/udf.rs:209)."""
+    """batch_size=1 vs 7 vs 500 give bit-identical predictions (the
+    reference's tail-chunk loop, src/udf.rs:209, cannot change a row's
+    score)."""
     rng = np.random.RandomState(0)
     feats = rng.standard_normal((23, N_FEATURES)).round(6)
     expected = fixture_model.predict(feats)
@@ -140,7 +141,7 @@ def test_batch_size_affects_chunking_not_results(engine, fixture_model):
         engine.sql(f"CREATE FUNCTION fbs(DOUBLE[]) LANGUAGE LIGHTGBM AS '{MODEL_PATH}'")
         rows = engine.sql("SELECT id, fbs(v) AS p FROM bs_input ORDER BY id").collect()
         got = np.array([r["p"] for r in rows])
-        np.testing.assert_allclose(got, expected, rtol=1e-12)
+        assert np.array_equal(got, expected), bs
     engine.sql("SET lightfusion.batch_size = 1")
 
 
